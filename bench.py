@@ -117,12 +117,6 @@ HEADLINE_12 = (
 )
 
 
-def _skipped_swaps() -> int:
-    from raft_c_spark.plans import registry
-
-    return len(registry.SKIPPED_SWAPS)
-
-
 def main() -> None:
     _BENCH_CACHE = _bench_cache_dir()
     os.environ["RAFT_C_SPARK_CACHE_DIR"] = _BENCH_CACHE
@@ -309,10 +303,6 @@ def main() -> None:
         "calib_sec": calib,
         "calib_samples": calib_samples,
         "value_per_calib": round(total / calib, 2) if calib else None,
-        # non-zero means a window-rotation swap failed to resolve at
-        # runtime (plan-module import failure) and the externally
-        # verified window silently shrank — surfaced per advisor r6
-        "skipped_swaps": _skipped_swaps(),
         # measured-this-run scan→noop floor and the floor-adjusted
         # total: value − floor × n_queries (plan cost net of the
         # per-query structural overhead that scales with registry
@@ -385,7 +375,6 @@ def main() -> None:
         tpch = round(
             sum(t for n, t in timings.items() if n.startswith("tpch_")), 2
         )
-        n_skipped = _skipped_swaps()
         return json.dumps(
             {
                 "metric": "headline_queries_total_runtime",
@@ -401,9 +390,6 @@ def main() -> None:
                     sum(timings[n] for n in HEADLINE_12 if n in timings), 2
                 ),
                 "full": "BENCH_FULL.json",
-                # only surfaced when something actually failed to
-                # resolve (keeps the tail-window line small)
-                **({"skipped_swaps": n_skipped} if n_skipped else {}),
                 **extra,
                 "queries": qs,
             },

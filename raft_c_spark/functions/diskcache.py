@@ -101,18 +101,18 @@ def cached_parquet(df: DataFrame, key: str) -> DataFrame:
 
 
 def data_cache_key(sf_dir: str, table: str) -> str:
-    """Cache key tied to the actual data file (basename + mtime +
-    size), so persisted indexes/signatures can NEVER go stale when the
-    driver regenerates the testdata between rounds — a new file means
-    a new key and a fresh build. Single definition (reviewer r8: two
-    verbatim copies lived in plans/dedup.py and plans/similarity.py —
-    a staleness fix to one would silently miss the other)."""
-    import os as _os
-
-    path = _os.path.join(sf_dir, f"{table}.parquet")
+    """Cache key tied to the actual data file (basename + mtime in
+    nanoseconds + size), so persisted indexes/signatures can NEVER go
+    stale when the driver regenerates the testdata between rounds — a
+    new file means a new key and a fresh build, even when the rewrite
+    lands within the same second and keeps the size. Single
+    definition (reviewer r8: two verbatim copies lived in
+    plans/dedup.py and plans/similarity.py — a staleness fix to one
+    would silently miss the other)."""
+    path = os.path.join(sf_dir, f"{table}.parquet")
     try:
-        st = _os.stat(path)
-        tag = f"{int(st.st_mtime)}_{st.st_size}"
+        st = os.stat(path)
+        tag = f"{st.st_mtime_ns}_{st.st_size}"
     except OSError:
         tag = "nofile"
-    return f"{_os.path.basename(sf_dir.rstrip('/'))}_{tag}"
+    return f"{os.path.basename(sf_dir.rstrip('/'))}_{tag}"

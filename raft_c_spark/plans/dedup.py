@@ -15,21 +15,13 @@ tests/test_dedup.py / tests/test_text_similarity.py.
 
 from __future__ import annotations
 
+from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.operators import dedup
 from raft_c_spark.sources.testdata import load_table
 
 JACCARD_THRESHOLD = 0.8
 COSINE_THRESHOLD = 0.30  # driver embeddings are random; ~top-of-distribution
 
-
-
-def _data_cache_key(sf_dir: str, table: str) -> str:
-    """Alias of functions.diskcache.data_cache_key — the single
-    definition of the staleness contract (reviewer r8: this was one
-    of two verbatim copies)."""
-    from raft_c_spark.functions.diskcache import data_cache_key
-
-    return data_cache_key(sf_dir, table)
 
 def q_dedup_exact_groups(spark, sf_dir):
     """Exact-content groups (normalized text): survivor id + group
@@ -54,7 +46,7 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -68,7 +60,7 @@ def q_dedup_minhash_lsh(spark, sf_dir):
     return dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -79,7 +71,7 @@ def q_dedup_simhash(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     return dedup.simhash_pairs(
         docs, "doc_id", "text", max_hamming=6,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -139,7 +131,7 @@ def q_dedup_components(spark, sf_dir):
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     return dedup.connected_components(pairs)
 
@@ -475,7 +467,7 @@ def q_dedup_impact_report(spark, sf_dir):
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     comps = dedup.connected_components(pairs)
     return dedup.cluster_impact(comps, docs)

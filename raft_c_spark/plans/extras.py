@@ -38,13 +38,13 @@ def q_dedup_ngram_word(spark, sf_dir):
     from raft_c_spark.operators import dedup
     from raft_c_spark.sources.testdata import load_table
 
-    from raft_c_spark.plans.dedup import _data_cache_key
+    from raft_c_spark.functions.diskcache import data_cache_key
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_jaccard_pairs(
         docs, "doc_id", "text", n=WORD_JACCARD_N, threshold=WORD_JACCARD_T,
         strategy="prefix", unit="word",
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -57,8 +57,9 @@ def q_dedup_minhash_incr(spark, sf_dir):
     as dedup_minhash_lsh with a cross-split candidate predicate."""
     from pyspark.sql import functions as F
 
+    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.operators import dedup
-    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD, _data_cache_key
+    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD
     from raft_c_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
@@ -67,10 +68,10 @@ def q_dedup_minhash_incr(spark, sf_dir):
     return dedup.minhash_lsh_pairs_between(
         new, corpus, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        corpus_cache_key=_data_cache_key(sf_dir, "documents") + "_even",
+        corpus_cache_key=data_cache_key(sf_dir, "documents") + "_even",
         # identifies both frames: the odd/even doc_id split of this
         # exact corpus fingerprint
-        pair_cache_key=_data_cache_key(sf_dir, "documents") + "_oddveven",
+        pair_cache_key=data_cache_key(sf_dir, "documents") + "_oddveven",
     )
 
 
@@ -83,8 +84,8 @@ def q_sim_topk_ivf_full(spark, sf_dir):
     exact cosine. The approximate sibling (sim_topk_ivf, n_probe=4)
     stays recall-pinned in pytest; this one is hash-oracled with the
     brute-force SQL."""
+    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.operators import similarity
-    from raft_c_spark.plans.dedup import _data_cache_key
     from raft_c_spark.plans.similarity import TOP_K, _query_vec
     from raft_c_spark.sources.testdata import load_table
 
@@ -95,7 +96,7 @@ def q_sim_topk_ivf_full(spark, sf_dir):
         k=TOP_K,
         n_lists=16,
         n_probe=16,
-        cache_key=_data_cache_key(sf_dir, "embeddings"),
+        cache_key=data_cache_key(sf_dir, "embeddings"),
     )
 
 
@@ -111,15 +112,15 @@ def q_sim_knn_join_lsh(spark, sf_dir):
     DuckDB replays bucket membership AND the rerank exactly."""
     from pyspark.sql import functions as F
 
+    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.operators import similarity
-    from raft_c_spark.plans.dedup import _data_cache_key
     from raft_c_spark.sources.testdata import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < KNN_QUERIES)
     return similarity.knn_join_lsh(
         queries, emb, k=KNN_K, bits=8, tables=16,
-        cache_key=_data_cache_key(sf_dir, "embeddings"),
+        cache_key=data_cache_key(sf_dir, "embeddings"),
     )
 
 
@@ -178,12 +179,12 @@ def q_dedup_repeated_spans(spark, sf_dir):
     from raft_c_spark.operators import dedup
     from raft_c_spark.sources.testdata import load_table
 
-    from raft_c_spark.plans.dedup import _data_cache_key
+    from raft_c_spark.functions.diskcache import data_cache_key
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.repeated_substring_spans(
         docs, "doc_id", "text", min_len=SPAN_LEN,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -429,15 +430,16 @@ def q_dedup_best_survivor(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
+    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.operators import dedup, text
-    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD, _data_cache_key
+    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD
     from raft_c_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     comps = dedup.connected_components(pairs)
     # score ONLY component members (r14, guide §1.2: don't compute
@@ -980,14 +982,14 @@ def q_dedup_containment(spark, sf_dir):
     b) — the asymmetric quote/subset near-dup relation; see
     dedup.ngram_containment_pairs for the prefix-on-the-contained-side
     candidate shape."""
+    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.operators import dedup
-    from raft_c_spark.plans.dedup import _data_cache_key
     from raft_c_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.ngram_containment_pairs(
         docs, "doc_id", "text", n=CONTAIN_N, threshold=CONTAIN_T,
-        unit="word", cache_key=_data_cache_key(sf_dir, "documents"),
+        unit="word", cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -1089,12 +1091,12 @@ def q_dedup_cut_spans(spark, sf_dir):
     from raft_c_spark.operators import dedup
     from raft_c_spark.sources.testdata import load_table
 
-    from raft_c_spark.plans.dedup import _data_cache_key
+    from raft_c_spark.functions.diskcache import data_cache_key
 
     docs = load_table(spark, sf_dir, "documents")
     return dedup.cut_repeated_spans(
         docs, "doc_id", "text", min_len=SPAN_LEN,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -1144,13 +1146,13 @@ def q_sim_knn_recall_tuned(spark, sf_dir):
     candidate-count budget (25% of exhaustive q×n). One row per tried
     rung; the chosen row certifies recall ≥ 0.9 with tuned params.
     See operators/similarity.certify_lsh_recall for the scale shape."""
+    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.operators import similarity
-    from raft_c_spark.plans.dedup import _data_cache_key
     from raft_c_spark.sources.testdata import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.certify_lsh_recall(
-        emb, cache_key=_data_cache_key(sf_dir, "embeddings")
+        emb, cache_key=data_cache_key(sf_dir, "embeddings")
     )
 
 

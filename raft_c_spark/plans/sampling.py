@@ -161,14 +161,15 @@ def q_ds_split_leakage_safe(spark, sf_dir):
     Deterministic md5 keying on the cluster rep, so the oracle
     replays pair generation + recursive-CTE reachability + the same
     hash thresholds in SQL."""
+    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.operators import dedup
-    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD, _data_cache_key
+    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     return sampling.leakage_safe_split(
         docs, "doc_id", pairs, SPLITS
@@ -358,14 +359,14 @@ def q_ds_importance_dsir(spark, sf_dir):
     downstream selects top-k by log_weight or Gumbel-resamples."""
     from pyspark.sql import functions as F
 
-    from raft_c_spark.plans.dedup import _data_cache_key
+    from raft_c_spark.functions.diskcache import data_cache_key
 
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "is_tgt", F.col("source").isin(*DSIR_TARGET_SOURCES)
     )
     return sampling.importance_weights(
         docs, "doc_id", "text", "is_tgt",
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -433,14 +434,14 @@ def q_ds_dsir_resample(spark, sf_dir):
     TakeOrderedAndProject (no global sort) plan shape."""
     from pyspark.sql import functions as F
 
-    from raft_c_spark.plans.dedup import _data_cache_key
+    from raft_c_spark.functions.diskcache import data_cache_key
 
     docs = load_table(spark, sf_dir, "documents").withColumn(
         "is_tgt", F.col("source").isin(*DSIR_TARGET_SOURCES)
     )
     w = sampling.importance_weights(
         docs, "doc_id", "text", "is_tgt",
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     return sampling.gumbel_topk(w, "doc_id", "log_weight", DSIR_K).select(
         "doc_id", "n_feats", "log_weight", "gumbel_key"
@@ -501,8 +502,8 @@ ORACLES["ds_training_order"] = f"""
 # The r12 window carries 28 rotation/newcomer slots needing their first
 # (or refreshed) driver green, and the artifact is cut; r13 registers
 # this with: QUERIES["ds_psi_drift"] = q_ds_psi_drift;
-# ORACLES["ds_psi_drift"] = PSI_DRIFT_ORACLE_SQL; plus one window swap
-# demoting an r12-green slot (the text_compression staging pattern).
+# ORACLES["ds_psi_drift"] = PSI_DRIFT_ORACLE_SQL; plus one
+# registry.WINDOW_QUERIES entry replacing an r12-green slot.
 
 PSI_BIN_WIDTH = 50
 PSI_N_BINS = 20

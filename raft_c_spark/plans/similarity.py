@@ -11,8 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.operators import similarity
-from raft_c_spark.sources.testdata import load_table
+from raft_c_spark.sources.testdata import corpus_paths, corpus_tags, load_table
 
 TOP_K = 20
 
@@ -21,15 +22,6 @@ def _query_vec(spark, sf_dir) -> list[float]:
     emb = load_table(spark, sf_dir, "embeddings")
     return list(emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"])
 
-
-
-def _data_cache_key(sf_dir: str, table: str) -> str:
-    """Alias of functions.diskcache.data_cache_key — the single
-    definition of the staleness contract (reviewer r8: this was one
-    of two verbatim copies)."""
-    from raft_c_spark.functions.diskcache import data_cache_key
-
-    return data_cache_key(sf_dir, table)
 
 def q_sim_topk_exact(spark, sf_dir):
     """Brute-force cosine top-20 against vec 0 — single scan,
@@ -53,7 +45,7 @@ def q_sim_topk_lsh(spark, sf_dir):
         k=TOP_K,
         bits=8,
         tables=16,
-        cache_key=_data_cache_key(sf_dir, "embeddings"),
+        cache_key=data_cache_key(sf_dir, "embeddings"),
     )
 
 
@@ -74,7 +66,7 @@ def q_sim_topk_ivf(spark, sf_dir):
         k=TOP_K,
         n_lists=16,
         n_probe=4,
-        cache_key=_data_cache_key(sf_dir, "embeddings"),
+        cache_key=data_cache_key(sf_dir, "embeddings"),
     )
 
 
@@ -222,16 +214,6 @@ def _corpus_fingerprint(mat) -> int:
     return int(np.floor(np.abs(mat[:, 0]) * 1e6).astype(np.int64).sum())
 
 
-def _embedding_corpus_paths() -> list[str]:
-    """Every embeddings.parquet the harness could register — thin
-    wrapper over the single shared helper (sources.testdata); the
-    oracle additionally fails loudly via ``error()`` if the lookup
-    still comes up empty."""
-    from raft_c_spark.sources.testdata import corpus_paths
-
-    return corpus_paths("embeddings")
-
-
 def _ivf_expected_rows() -> list[dict]:
     """Pure-numpy replay of q_sim_topk_ivf over every testdata corpus:
     same id-ordered fit matrix — including the xxhash64 %-denom fit
@@ -255,7 +237,7 @@ def _ivf_expected_rows() -> list[dict]:
     )
 
     rows: list[dict] = []
-    for path in _embedding_corpus_paths():
+    for path in corpus_paths("embeddings"):
         t = pq.read_table(path, columns=["vec_id", "embedding"])
         ids = np.asarray(t["vec_id"].to_pylist(), dtype=np.int64)
         mat = np.stack(
@@ -301,19 +283,13 @@ def ivf_expected_parquet_path() -> str:
     """Ground-truth IVF top-k for every testdata corpus, keyed by the
     data files themselves (mtime+size) so regenerated testdata forces
     a fresh replay."""
-    import os
-
     import pyarrow as pa
 
     from raft_c_spark.plans.multimodal import _ground_truth_parquet
 
-    tags = "_".join(
-        _data_cache_key(os.path.dirname(p), "embeddings")
-        for p in _embedding_corpus_paths()
-    )
     return _ground_truth_parquet(
         f"ivf_expected_v{IVF_GT_VERSION}_l{IVF_LISTS}_p{IVF_PROBE}"
-        f"_s{IVF_SEED}_k{TOP_K}_{tags}.parquet",
+        f"_s{IVF_SEED}_k{TOP_K}_{corpus_tags('embeddings')}.parquet",
         _ivf_expected_rows,  # thunk: only replayed on a cache miss
         [
             ("corpus_fp", pa.int64()),
@@ -334,7 +310,7 @@ def ivf_oracle_sql() -> str:
         UNION ALL
         SELECT CAST(error('no IVF ground truth for this embeddings corpus; '
                           'add its sf dir to the search roots '
-                          '(plans/similarity._embedding_corpus_paths)') AS BIGINT),
+                          '(sources/testdata.corpus_paths)') AS BIGINT),
                NULL
         WHERE NOT EXISTS (
             SELECT 1 FROM {gt} WHERE corpus_fp = ({_FP_SQL})

@@ -7,10 +7,11 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.functions.exact import dec, sql_dec
 from raft_c_spark.operators import text
 from raft_c_spark.operators.text import STOPWORDS
-from raft_c_spark.sources.testdata import load_table
+from raft_c_spark.sources.testdata import corpus_paths, corpus_tags, load_table
 
 
 def q_text_analyze(spark, sf_dir):
@@ -415,12 +416,10 @@ def q_text_lm_score(spark, sf_dir):
     corpus self-scoring) — see text.ngram_lm_score for the two-count
     + two-natural-key-join scale shape and the decimal-quantized-log
     determinism contract."""
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return text.ngram_lm_score(
         docs, "doc_id", "text",
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
 
 
@@ -717,11 +716,9 @@ def q_ds_ccnet_buckets(spark, sf_dir):
     """CCNet perplexity bucketing: bigram-LM score per doc, per-lang
     exact-percentile cuts at 0.25/0.75, per (lang, bucket) counts +
     median/min/max — see operators.text.ccnet_perplexity_buckets."""
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return text.ccnet_perplexity_buckets(
-        docs, cache_key=_data_cache_key(sf_dir, "documents")
+        docs, cache_key=data_cache_key(sf_dir, "documents")
     )
 
 
@@ -764,11 +761,9 @@ def q_ds_ccnet_buckets_approx(spark, sf_dir):
     the sketch's own ±1/accuracy (+2/N slack) error band — sketch
     VALUES are engine-specific, so the certified contract is what
     crosses the driver hash. See text.ccnet_buckets_approx_certify."""
-    from raft_c_spark.plans.dedup import _data_cache_key
-
     docs = load_table(spark, sf_dir, "documents")
     return text.ccnet_buckets_approx_certify(
-        docs, cache_key=_data_cache_key(sf_dir, "documents")
+        docs, cache_key=data_cache_key(sf_dir, "documents")
     )
 
 
@@ -1010,21 +1005,6 @@ COMPRESSION_LEVEL = 6
 COMPRESSION_GT_VERSION = 1
 
 
-def _docs_corpus_paths() -> list[str]:
-    import os
-
-    roots = [
-        "/root/testdata/sf0.001",
-        "/root/testdata/sf0.01",
-        "/root/testdata/sf0.1",
-    ]
-    return [
-        os.path.join(r, "documents.parquet")
-        for r in roots
-        if os.path.exists(os.path.join(r, "documents.parquet"))
-    ]
-
-
 def _compression_expected_rows() -> list[dict]:
     """Pure-python replay (pyarrow + zlib — no Spark) of the operator
     over every registered documents corpus, tagged by fingerprint."""
@@ -1032,8 +1012,9 @@ def _compression_expected_rows() -> list[dict]:
 
     import pyarrow.parquet as pq
 
+
     rows: list[dict] = []
-    for path in _docs_corpus_paths():
+    for path in corpus_paths("documents"):
         t = pq.read_table(path, columns=["doc_id", "text"])
         ids = t.column("doc_id").to_pylist()
         texts = t.column("text").to_pylist()
@@ -1062,13 +1043,16 @@ def _compression_expected_rows() -> list[dict]:
 
 
 def compression_expected_parquet_path() -> str:
+    """Ground-truth compression rows for every documents corpus, keyed
+    by the data files (mtime+size) so a regenerated corpus forces a
+    fresh replay."""
     import pyarrow as pa
 
     from raft_c_spark.plans.multimodal import _ground_truth_parquet
 
     return _ground_truth_parquet(
         f"compression_expected_v{COMPRESSION_GT_VERSION}"
-        f"_l{COMPRESSION_LEVEL}.parquet",
+        f"_l{COMPRESSION_LEVEL}_{corpus_tags('documents')}.parquet",
         _compression_expected_rows,
         [
             ("corpus_fp", pa.int64()),
@@ -1095,8 +1079,9 @@ def compression_oracle_sql() -> str:
         FROM {gt} WHERE corpus_fp = ({DOCS_FP_SQL})
         UNION ALL
         SELECT CAST(error('no compression ground truth for this '
-                          'documents corpus; add its sf dir to '
-                          'plans/text._docs_corpus_paths') AS BIGINT),
+                          'documents corpus; add its sf dir to the '
+                          'search roots (sources/testdata.corpus_paths)')
+                    AS BIGINT),
                NULL, NULL, NULL
         WHERE NOT EXISTS (
             SELECT 1 FROM {gt} WHERE corpus_fp = ({DOCS_FP_SQL})

@@ -21,7 +21,7 @@ from __future__ import annotations
 from collections.abc import Mapping
 
 from raft_c_spark.operators import bpe, sampling
-from raft_c_spark.sources.testdata import load_table
+from raft_c_spark.sources.testdata import corpus_paths, corpus_tags, load_table
 
 #: training/encode parameters (also baked into cache + ground-truth
 #: keys via bpe.BPE_VERSION)
@@ -36,14 +36,6 @@ _FP_SQL = (
     "SELECT CAST(SUM((doc_id % 1000 + 1) * n_chars) AS BIGINT) "
     "FROM documents"
 )
-
-
-def _documents_corpus_paths() -> list[str]:
-    """Every documents.parquet the harness could register — thin
-    wrapper over the single shared helper (sources.testdata)."""
-    from raft_c_spark.sources.testdata import corpus_paths
-
-    return corpus_paths("documents")
 
 
 def replay_counts(path: str) -> list[dict]:
@@ -99,27 +91,19 @@ def corpus_fp_py(path: str) -> int:
 def expected_parquet_path() -> str:
     """Ground-truth per-doc BPE counts for every testdata documents
     corpus, keyed by the data files (mtime+size) + all params."""
-    import os
-
     import pyarrow as pa
 
-    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.plans.multimodal import _ground_truth_parquet
-
-    tags = "_".join(
-        data_cache_key(os.path.dirname(p), "documents")
-        for p in _documents_corpus_paths()
-    )
 
     def _rows() -> list[dict]:
         out: list[dict] = []
-        for p in _documents_corpus_paths():
+        for p in corpus_paths("documents"):
             out += replay_counts(p)
         return out
 
     return _ground_truth_parquet(
         f"bpe_expected_v{bpe.BPE_VERSION}_m{NUM_MERGES}"
-        f"_w{MAX_WORDS}_{tags}.parquet",
+        f"_w{MAX_WORDS}_{corpus_tags('documents')}.parquet",
         _rows,
         [
             ("corpus_fp", pa.int64()),
@@ -196,7 +180,7 @@ def _oracles() -> dict[str, str]:
         UNION ALL
         SELECT CAST(error('no BPE ground truth for this documents corpus; '
                           'add its sf dir to the search roots '
-                          '(plans/text_bpe._documents_corpus_paths)') AS BIGINT),
+                          '(sources/testdata.corpus_paths)') AS BIGINT),
                NULL, NULL
         WHERE NOT EXISTS (
             SELECT 1 FROM {gt} WHERE corpus_fp = ({_FP_SQL})
@@ -223,7 +207,7 @@ def _oracles() -> dict[str, str]:
             UNION ALL
             SELECT CAST(error('no BPE ground truth for this documents corpus; '
                               'add its sf dir to the search roots '
-                              '(plans/text_bpe._documents_corpus_paths)') AS BIGINT),
+                              '(sources/testdata.corpus_paths)') AS BIGINT),
                    NULL, NULL, NULL, NULL
             WHERE NOT EXISTS (
                 SELECT 1 FROM {gt} WHERE corpus_fp = ({_FP_SQL})
@@ -340,7 +324,7 @@ def _mix_oracle() -> str:
         UNION ALL
         SELECT CAST(error('no BPE ground truth for this documents corpus; '
                           'add its sf dir to the search roots '
-                          '(plans/text_bpe._documents_corpus_paths)') AS BIGINT),
+                          '(sources/testdata.corpus_paths)') AS BIGINT),
                NULL, NULL, NULL, NULL
         WHERE NOT EXISTS (SELECT 1 FROM {gt} WHERE corpus_fp = ({_FP_SQL}))
     """
@@ -421,7 +405,7 @@ def _compression_oracle() -> str:
         UNION ALL
         SELECT CAST(error('no BPE ground truth for this documents corpus; '
                           'add its sf dir to the search roots '
-                          '(plans/text_bpe._documents_corpus_paths)')
+                          '(sources/testdata.corpus_paths)')
                     AS VARCHAR),
                NULL, NULL, NULL, NULL, NULL, NULL
         WHERE NOT EXISTS (SELECT 1 FROM {gt} WHERE corpus_fp = ({_FP_SQL}))

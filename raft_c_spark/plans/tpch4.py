@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from raft_c_spark.functions.exact import dec, sql_dec, sql_sum_expr
-from raft_c_spark.plans.tpch import _SQL_DISC_PRICE, _disc_price, _fact_wide
+from raft_c_spark.plans.tpch import _SQL_DISC_PRICE, _disc_price
 from raft_c_spark.sources.testdata import load_table
 
 _HIGH = ("1-URGENT", "2-HIGH")
@@ -104,7 +104,7 @@ def q_waiting_supplier(spark, sf_dir):
     semantics, one shuffle."""
     s = load_table(spark, sf_dir, "supplier")
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
-    l = _fact_wide(load_table(spark, sf_dir, "lineitem"))
+    l = load_table(spark, sf_dir, "lineitem")
     lo = l.join(o, l.l_orderkey == o.o_orderkey).withColumn(
         "is_late",
         F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 60 DAYS"),

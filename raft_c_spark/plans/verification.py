@@ -38,8 +38,8 @@ def stale_out_of_window(
 ) -> list[tuple[int, str]]:
     """(newest_row_round, query) for every query OUTSIDE the current
     window whose newest driver row is more than ``STALE_AFTER`` rounds
-    behind the newest artifact — the rotation debt the next round's
-    swap batch must clear."""
+    behind the newest artifact — the rotation debt the next edit of
+    ``registry.WINDOW_QUERIES`` must clear."""
     rows = driver_rows(repo_root)
     cutoff = newest_driver_round(repo_root) - STALE_AFTER
     out = []

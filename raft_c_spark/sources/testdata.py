@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from raft_c_spark.functions.diskcache import data_cache_key
 from raft_c_spark.session import ensure_runtime_confs
 
 TABLES = [
@@ -51,7 +52,8 @@ def corpus_paths(table: str) -> list[str]:
     SINGLE definition (reviewer r10: plans/similarity and
     plans/text_bpe carried near-verbatim copies differing only in the
     basename — the duplicate-helper drift the data_cache_key
-    consolidation already fixed once for a different pair)."""
+    consolidation already fixed once for a different pair); call it
+    directly rather than through per-module wrappers."""
     import glob
 
     paths = set(glob.glob(f"/root/testdata/sf*/{table}.parquet"))
@@ -62,6 +64,15 @@ def corpus_paths(table: str) -> list[str]:
             if os.path.isfile(p):
                 paths.add(p)
     return sorted(paths)
+
+
+def corpus_tags(table: str) -> str:
+    """Cache-key fragment naming every ``corpus_paths(table)`` file by
+    name, mtime and size: ground truth keyed by it is replayed afresh
+    whenever any of those corpora is regenerated."""
+    return "_".join(
+        data_cache_key(os.path.dirname(p), table) for p in corpus_paths(table)
+    )
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

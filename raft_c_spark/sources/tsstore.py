@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+from functools import wraps
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,10 +44,26 @@ POINT_SCHEMA = Ty.StructType(
 )
 
 
+def _serialized(method):
+    """Run a store write under the store's write lock. Every write
+    under ``{db}/points`` commits through Spark's one shared
+    ``points/_temporary`` directory, so two concurrent writers to a
+    database lose acknowledged points or publish those of a failed
+    write. Reentrant: ``insert_df`` dispatches to ``_upsert``."""
+
+    @wraps(method)
+    def locked(self, *args, **kwargs):
+        with self._write_lock:
+            return method(self, *args, **kwargs)
+
+    return locked
+
+
 class TimeSeriesStore:
     def __init__(self, spark: SparkSession, warehouse: str):
         self.spark = spark
         self.warehouse = warehouse
+        self._write_lock = threading.RLock()
 
     def _points_path(self, db: str) -> str:
         return os.path.join(self.warehouse, db, "points")
@@ -110,6 +128,7 @@ class TimeSeriesStore:
         )
         return self.insert_df(db, df, duplication)
 
+    @_serialized
     def insert_df(self, db: str, df: DataFrame, duplication: str = "insert") -> int:
         """Append canonical-schema points. ``duplication='ignore'``
         drops in-batch duplicate timestamps and timestamps already
@@ -181,6 +200,7 @@ class TimeSeriesStore:
         )
         return n
 
+    @_serialized
     def _upsert(self, db: str, out: DataFrame) -> int:
         """DP_UPDATE merge: rewrite ONLY the touched (series, day)
         partitions, replacing rows whose timestamp collides with the
@@ -300,16 +320,19 @@ class TimeSeriesStore:
                 return os.path.join(base, d)
         return None
 
+    @_serialized
     def drop_series(self, db: str, series: str) -> None:
         path = self._series_dir(db, series)
         if path is not None:
             shutil.rmtree(path)
 
+    @_serialized
     def drop_db(self, db: str) -> None:
         path = os.path.join(self.warehouse, db)
         if os.path.exists(path):
             shutil.rmtree(path)
 
+    @_serialized
     def compact(self, db: str) -> None:
         """Rewrite the store with one sorted file set per (series, day)
         partition — the small-file maintenance pass every append-heavy
@@ -346,6 +369,7 @@ class TimeSeriesStore:
         os.rename(tmp, path)
         shutil.rmtree(bak)
 
+    @_serialized
     def vacuum(self, db: str, series: str, retention_ns: int, now: int) -> None:
         """Physically drop whole day-partitions older than retention —
         O(directories), no data rewrite (day granularity; read-time

@@ -34,15 +34,16 @@ def explain_str(df) -> str:
 def best_survivor_before(spark, sf_dir):
     from pyspark.sql import functions as F
 
+    from raft_c_spark.functions.diskcache import data_cache_key
     from raft_c_spark.operators import dedup, text
-    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD, _data_cache_key
+    from raft_c_spark.plans.dedup import JACCARD_THRESHOLD
     from raft_c_spark.sources.testdata import load_table
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = dedup.minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=64, bands=8,
         threshold=JACCARD_THRESHOLD,
-        cache_key=_data_cache_key(sf_dir, "documents"),
+        cache_key=data_cache_key(sf_dir, "documents"),
     )
     comps = dedup.connected_components(pairs)
     qual = text.analyze(docs).select("doc_id", "quality")

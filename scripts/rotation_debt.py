@@ -11,7 +11,8 @@ numbers the CI guard (`tests/test_window_policy.py`) enforces.
 Usage: python scripts/rotation_debt.py [--rounds 4]
 Prints, per future round r: the queries whose newest driver-green row
 would be older than ``r - STALE_AFTER`` while sitting outside the
-current window — the set the round-r swap batch must rotate in.
+current window — the names to rotate into
+``raft_c_spark.plans.registry.WINDOW_QUERIES`` before round r.
 """
 
 from __future__ import annotations
@@ -53,11 +54,12 @@ def main() -> int:
           f"newest artifact r{newest}, STALE_AFTER {STALE_AFTER}")
 
     stale_now = stale_out_of_window(REPO, names)
-    print(f"\nstale NOW (CI-enforced): {stale_now or 'none'}")
+    print(f"\nstale NOW (CI-enforced; rotate into registry.WINDOW_QUERIES): "
+          f"{stale_now or 'none'}")
 
     # projection: later rounds are computed against TODAY's
-    # out-of-window set (each future round's own swaps will change
-    # the window — this shows the debt that exists unless they do);
+    # out-of-window set (each future WINDOW_QUERIES edit changes the
+    # window — this shows the debt that exists unless one does);
     # in-window queries are refreshed by the upcoming driver run by
     # definition, and they never appear in the scanned tail, so no
     # simulation augmentation is needed

@@ -37,24 +37,14 @@ def test_entry_smoke(spark):
     assert df.schema is not None
 
 
-def test_window_swap_names_resolve():
-    """_rotated() skips swap pairs naming absent queries (so an
-    optional plan module failing to import degrades instead of
-    crashing bench/soak/driver); this test is the strict companion:
-    a typo'd or renamed swap name fails CI here."""
-    import warnings
+def test_entry_queries_lead_with_window():
+    """The driver's entry point presents ``WINDOW_QUERIES`` first, in
+    order, and every name in it resolves to a registered query."""
+    from raft_c_spark.plans.registry import WINDOW_QUERIES
 
-    from raft_c_spark.plans.registry import _WINDOW_SWAPS
-
-    names = set(entrymod.queries())
-    for a, b in _WINDOW_SWAPS:
-        assert a in names and b in names, f"swap names missing: {(a, b)}"
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")
-        entrymod.queries()  # full rotation must emit no skip warnings
-    from raft_c_spark.plans import registry
-
-    assert registry.SKIPPED_SWAPS == []  # surfaced counter stays zero
+    names = list(entrymod.queries())
+    assert names[: len(WINDOW_QUERIES)] == list(WINDOW_QUERIES)
+    assert len(names) == len(set(names))
 
 
 def test_every_query_has_callable_and_name_parity():

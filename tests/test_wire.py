@@ -189,6 +189,64 @@ def test_concurrent_clients_share_session_state(spark, tmp_path):
         c1.close(); c2.close(); server.shutdown()
 
 
+def test_concurrent_inserts_keep_every_acknowledged_point(spark, tmp_path):
+    """Four clients INSERT distinct timestamps into one database at
+    once. Every write commits through the store's shared
+    ``points/_temporary`` directory, so unserialized writers lose
+    acknowledged points or publish those of a failed INSERT; a fresh
+    Engine over the warehouse must read each acknowledged point
+    exactly once and nothing else."""
+    import sys
+    import threading
+
+    from raft_c_spark.engine import Engine
+
+    warehouse = str(tmp_path / "wirewh_writers")
+    server = wire.serve(Engine(spark, warehouse=warehouse))
+    host, port = server.server_address
+    setup = wire.WireClient(host, port)
+    base = 1_700_000_000_000_000_000
+    acked: dict[int, list[tuple[int, float]]] = {}
+
+    def writer(w: int) -> None:
+        client = wire.WireClient(host, port)
+        try:
+            for i in range(3):
+                pts = [(base + 1000 * (10 * w + i) + j, float(w)) for j in range(4)]
+                values = ", ".join(f"({t}, {v})" for t, v in pts)
+                resp = client.execute(f"INSERT INTO s VALUES {values}")
+                if isinstance(resp, StringResponse) and resp.rc == 0:
+                    acked.setdefault(w, []).extend(pts)
+        finally:
+            client.close()
+
+    switch = sys.getswitchinterval()
+    try:
+        for q in ("CREATEDB race", "USE race", "CREATE s"):
+            setup.execute(q)
+        sys.setswitchinterval(1e-5)
+        threads = [threading.Thread(target=writer, args=(w,)) for w in range(4)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads), "writers hung"
+    finally:
+        sys.setswitchinterval(switch)
+        setup.close()
+        server.shutdown()
+
+    expect = sorted(p for pts in acked.values() for p in pts)
+    fresh = Engine(spark, warehouse=warehouse)
+    fresh.sql("USE race")
+    got = sorted(
+        (r["timestamp"], r["value"])
+        for r in fresh.sql("SELECT value FROM s").collect()
+    )
+    assert got == expect
+    assert len(expect) == 4 * 3 * 4, "every INSERT should be acknowledged"
+
+
 # ---------------------------------------------------------------------------
 # fuzz / property suite (judge r8 ask #7): the frame decoders must be
 # total over arbitrary bytes — any input either decodes to a frame
